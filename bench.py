@@ -63,6 +63,8 @@ from data_integration_celery_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPEATS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
 REPO = os.path.dirname(os.path.abspath(__file__))
+# the compact tail line's JSON length; +1 newline = the 2000 archived chars
+_TAIL_LIMIT = 1999
 
 # Workload-definition changes that make a query's cross-round history
 # non-comparable — carried IN the bench ledger so a drift reader never
@@ -172,8 +174,13 @@ def _baseline_name() -> str:
     # ledger then compared 32-core medians against 8-core ones. 32 cores
     # keeps the historical unsuffixed name (every archived BENCH_r*.json
     # cites it); any other count gets its own file and its own history.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    suffix = "" if cpus == "32" else f"_c{cpus}"
+    # Parsed as an int so "032" or " 32" cannot fork the history; an
+    # unparseable value keeps the unsuffixed name.
+    try:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    except ValueError:
+        cpus = 32
+    suffix = "" if cpus == 32 else f"_c{cpus}"
     return f"BENCH_LAST_{_sf_tag()}{suffix}.json"
 
 
@@ -207,8 +214,9 @@ def _prev_tail_names(prev: dict[str, float]) -> frozenset:
     tail's names makes drops-by-truncation structurally impossible).
 
     The previous payload records its own tail ("tail_names", written since
-    r13); for older payloads fall back to a superset — the slowest 55 by
-    prev medians contain any slowest-~51 tail the old truncation kept."""
+    r13); for older payloads fall back to a superset of it: the old tail
+    was the slowest-N prefix that fit the line, so take the longest
+    slowest-first prefix of prev whose query entries alone fit the line."""
     try:
         with open(_baseline_path()) as fh:
             rec = json.load(fh)
@@ -217,7 +225,12 @@ def _prev_tail_names(prev: dict[str, float]) -> frozenset:
             return frozenset(names)
     except Exception:
         pass
-    return frozenset(sorted(prev, key=prev.get, reverse=True)[:55])
+    ranked = sorted(prev, key=prev.get, reverse=True)
+    n = len(ranked)
+    while n and len(json.dumps({k: round(prev[k], 2) for k in ranked[:n]},
+                               separators=(",", ":"))) > _TAIL_LIMIT:
+        n -= 1
+    return frozenset(ranked[:n])
 
 
 def main() -> None:
@@ -395,7 +408,7 @@ def main() -> None:
 
 def _padded_compact_line(compact: dict, med: dict[str, float],
                          protected: frozenset = frozenset(),
-                         limit: int = 1999) -> str:
+                         limit: int = _TAIL_LIMIT) -> str:
     """The exactly-(limit+1)-char tail line: pad + compact JSON + newline.
 
     Shrinks the queries dict one name at a time — evicting the fastest
@@ -403,10 +416,11 @@ def _padded_compact_line(compact: dict, med: dict[str, float],
     (the driver's PERF diff compares tails across rounds; a fast query
     falling below a slowest-N cutoff read as "dropped_from_bench" in r12).
     Only if the protected names alone still overflow does it evict from
-    them too (fastest first), and if even the query-less summary overflows
-    it drops optional scalar fields — a negative pad would silently
-    reintroduce the mid-line-cut unparseable tail this two-line protocol
-    exists to prevent, so overflow past every fallback raises instead."""
+    them too (fastest first, down to an empty dict), and if even the
+    query-less summary overflows it drops optional scalar fields — a
+    negative pad would silently reintroduce the mid-line-cut unparseable
+    tail this two-line protocol exists to prevent, so overflow past every
+    fallback raises instead."""
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) > limit and compact["queries"]:
         # eviction order: unprotected before protected, fastest first
@@ -414,7 +428,7 @@ def _padded_compact_line(compact: dict, med: dict[str, float],
                        key=lambda n: (n in protected, med.get(n, 0.0)))
         kept = dict(compact["queries"])
         for name in evict:
-            if len(line) <= limit or len(kept) <= 1:
+            if len(line) <= limit:
                 break
             del kept[name]
             compact["queries"] = dict(kept)

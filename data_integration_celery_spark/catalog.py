@@ -74,10 +74,6 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load(spark, t, sf_dir) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every table as a temp view so spark.sql() can address them."""
     for t in TABLES:

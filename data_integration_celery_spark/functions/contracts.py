@@ -57,11 +57,3 @@ def delivery_ym(code: Column, reference_year: int = 2020) -> Column:
     return (F.when(n == 4, ym4)
              .when(n == 3, ym3)
              .otherwise(F.lit(None).cast("int")))
-
-
-def parse_contract(code: Column, reference_year: int = 2020) -> Column:
-    """Struct of (instrument_type, delivery_ym, exchange) for one pass."""
-    return F.struct(
-        instrument_type(code).alias("instrument_type"),
-        delivery_ym(code, reference_year).alias("delivery_ym"),
-        exchange(code).alias("exchange"))

@@ -9,10 +9,15 @@ Scale design notes (the point of each variant):
   within blocking buckets (here: identical signature or banded prefix).
 - n-gram Jaccard: exact verification on candidate pairs (or a bounded sample).
 
-All hashing uses Spark's xxhash64/crc32 — deterministic across runs, JVM-side.
+Exact dedup fingerprints with md5. The MinHash/SimHash operators take
+``hasher=``: ``"xxhash64"`` (production, seeded 64-bit JVM hash) or
+``"md5"`` (engine-portable: DuckDB reproduces it, so those runs carry exact
+oracles). Both are deterministic across runs and JVM-side.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,7 +41,7 @@ from .text import normalized
 # A result DataFrame holding an evicted table stays correct — persist
 # keeps lineage, it just recomputes. Deterministic plans make handle
 # reuse value-safe. The key is the PLAN hash alone, NOT (slot, hash):
-# sibling entry points (minhash_clusters / minhash_banded_pairs on the
+# sibling entry points (minhash_clusters / minhash_lsh_candidates on the
 # same corpus) build semantically-equal plans that Spark's CacheManager
 # backs with ONE InMemoryRelation — two slot-distinct LRU keys would
 # alias that single cache entry, and evicting either would silently
@@ -125,30 +130,15 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
             .drop("__fp"))
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle array of the normalized text.
-
-    NOTE: higher-order array expressions evaluate interpreted — fine for
-    per-row use on small frames, but corpus-scale paths should use
-    ``shingle_postings`` (posexplode + lead window), which is ~7x faster.
-    """
-    toks = F.split(normalized(text), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(F.transform(
-            idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))),
-    ).otherwise(F.array(normalized(text)))
-
-
 def shingle_postings(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", n: int = 3,
                      extra_cols: list[str] | None = None) -> DataFrame:
     """Distinct (id, shingle) postings via posexplode + lead windows.
 
-    Produces exactly the shingle *set* of ``shingles()`` (docs shorter than
-    ``n`` tokens contribute their whole normalized text) but stays in
-    whole-stage codegen: one shuffle on the doc id, no interpreted lambdas.
+    Each document's shingle *set* is its distinct word n-grams; docs
+    shorter than ``n`` tokens contribute their whole normalized text. Stays
+    in whole-stage codegen (one shuffle on the doc id, no interpreted
+    array lambdas, ~7x faster than a transform()-over-slices Column form).
     This is the corpus-scale path shared by Jaccard and MinHash.
     """
     extra = extra_cols or []
@@ -172,14 +162,6 @@ def shingle_postings(docs: DataFrame, text_col: str = "text",
                   .join(with_sh.where(F.col("n_tok") < n)
                         .select(id_col).distinct(), id_col))
     return long_docs.unionByName(short_docs).dropDuplicates([id_col, "s"])
-
-
-def minhash_signature(sh: Column, num_hashes: int = 32) -> Column:
-    """k independent min-hashes of the shingle set (seeded xxhash64)."""
-    return F.array(*[
-        F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(i))))
-        for i in range(num_hashes)
-    ])
 
 
 def lsh_params(num_hashes: int, threshold: float,
@@ -219,28 +201,57 @@ def lsh_params(num_hashes: int, threshold: float,
     return best[1], best[2]
 
 
-def _perm_hash_xxhash64(s: Column, i: int) -> Column:
-    """Permutation i's shingle hash, production form: seeded 64-bit JVM hash."""
-    return F.xxhash64(s, F.lit(i))
+def _band_key(parts: list[Column]) -> Column:
+    """A band's signature slice as one comma-joined string."""
+    return F.concat_ws(",", *[p.cast("string") for p in parts])
 
 
-def _perm_hash_md5(s: Column, i: int) -> Column:
-    """Permutation i's shingle hash, engine-portable twin: STRING
-    md5('i:' || s) — lexicographic min is identical on any engine."""
-    return F.md5(F.concat(F.lit(f"{i}:"), s))
+def _md5_hex_bit(tok: Column, i: int) -> Column:
+    """Bit i of a token's md5: bit (i mod 4) of hex digit i/4 — mirrored as
+    strpos/div/mod arithmetic in the SQL oracle."""
+    digit = F.conv(F.substring(F.md5(tok), i // 4 + 1, 1), 16, 10).cast("int")
+    return F.shiftright(digit, i % 4).bitwiseAND(F.lit(1))
 
 
-def _bucket_hash_xxhash64(parts: list[Column]) -> Column:
-    return F.xxhash64(F.concat_ws(",", *[p.cast("string") for p in parts]))
+class _HashFamily(NamedTuple):
+    perm: Callable[[Column, int], Column]       # MinHash permutation i
+    bucket: Callable[[list[Column]], Column]    # LSH band-slice bucket key
+    token_bit: Callable[[Column, int], Column]  # SimHash: bit i of a token
+    max_bits: int                               # SimHash signature width cap
 
 
-def _bucket_hash_md5(parts: list[Column]) -> Column:
-    return F.md5(F.concat_ws(",", *[p.cast("string") for p in parts]))
+# The one place the hash family is chosen. xxhash64 is the production
+# form: seeded 64-bit JVM hashes. md5 is the engine-portable form (DuckDB
+# has md5 but no xxhash64, so only md5 runs carry exact oracles): a
+# permutation hash is the STRING md5('i:' || s), whose lexicographic min
+# is identical on any engine, and SimHash stops at 60 bits = 15 hex digits.
+_HASH_FAMILIES = {
+    "xxhash64": _HashFamily(
+        perm=lambda s, i: F.xxhash64(s, F.lit(i)),
+        bucket=lambda parts: F.xxhash64(_band_key(parts)),
+        token_bit=lambda tok, i: (F.shiftright(F.xxhash64(tok), i)
+                                  .bitwiseAND(F.lit(1))),
+        max_bits=63),
+    "md5": _HashFamily(
+        perm=lambda s, i: F.md5(F.concat(F.lit(f"{i}:"), s)),
+        bucket=lambda parts: F.md5(_band_key(parts)),
+        token_bit=_md5_hex_bit,
+        max_bits=60),
+}
+
+
+def check_hasher(hasher: str) -> str:
+    """Return ``hasher`` if it names a hash family ("xxhash64" or "md5");
+    raise ValueError otherwise — a typo must never fall back silently."""
+    if hasher not in _HASH_FAMILIES:
+        raise ValueError(
+            f"hasher must be 'xxhash64' or 'md5', got {hasher!r}")
+    return hasher
 
 
 def banded_signatures(docs: DataFrame, text_col: str, id_col: str,
                       num_hashes: int, bands: int,
-                      perm_hash, bucket_hash) -> DataFrame:
+                      hasher: str = "xxhash64") -> DataFrame:
     """Banded minhash rows ``(id, sig, band, bucket)`` — the LSH *index*.
 
     One row per (document, band); ``bucket`` is the hash of that band's
@@ -251,22 +262,23 @@ def banded_signatures(docs: DataFrame, text_col: str, id_col: str,
     re-hashing 100 TB per day.
     """
     return _band_explode(
-        minhash_signature_table(docs, text_col, id_col, num_hashes,
-                                perm_hash),
-        [id_col], num_hashes, bands, bucket_hash)
+        minhash_signature_table(docs, text_col, id_col, num_hashes, hasher),
+        [id_col], num_hashes, bands, hasher)
 
 
 def minhash_signature_table(docs: DataFrame, text_col: str, id_col: str,
-                            num_hashes: int, perm_hash) -> DataFrame:
+                            num_hashes: int,
+                            hasher: str = "xxhash64") -> DataFrame:
     """One minhash signature array per document: ``(id, sig)``.
 
     Codegen'd per-permutation min-aggregates over the shingle postings —
     one shuffle on the doc id with map-side partials. Shared by the banded
     index (``banded_signatures``) and the contracted cluster path
     (``minhash_clusters``)."""
+    perm = _HASH_FAMILIES[check_hasher(hasher)].perm
     exploded = shingle_postings(docs, text_col, id_col)
     return (exploded.groupBy(id_col)
-            .agg(*[F.min(perm_hash(F.col("s"), i)).alias(f"h{i}")
+            .agg(*[F.min(perm(F.col("s"), i)).alias(f"h{i}")
                    for i in range(num_hashes)])
             .select(id_col, F.array(*[F.col(f"h{i}")
                                       for i in range(num_hashes)])
@@ -274,17 +286,18 @@ def minhash_signature_table(docs: DataFrame, text_col: str, id_col: str,
 
 
 def _band_explode(sig_df: DataFrame, key_cols: list[str], num_hashes: int,
-                  bands: int, bucket_hash) -> DataFrame:
+                  bands: int, hasher: str) -> DataFrame:
     """Explode ``(keys…, sig)`` rows to ``(keys…, sig, band, bucket)``."""
     r = num_hashes // bands
     if r * bands != num_hashes:
         raise ValueError("bands must divide num_hashes")
+    bucket = _HASH_FAMILIES[check_hasher(hasher)].bucket
     return sig_df.select(
         *key_cols, "sig",
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band"),
-                     bucket_hash([F.element_at("sig", b * r + i + 1)
-                                  for i in range(r)]).alias("bucket"))
+                     bucket([F.element_at("sig", b * r + i + 1)
+                             for i in range(r)]).alias("bucket"))
             for b in range(bands)])).alias("bb")) \
         .select(*key_cols, "sig", F.col("bb.band").alias("band"),
                 F.col("bb.bucket").alias("bucket"))
@@ -293,13 +306,14 @@ def _band_explode(sig_df: DataFrame, key_cols: list[str], num_hashes: int,
 def minhash_clusters(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", num_hashes: int = 32,
                      bands: int = 8, threshold: float = 0.5,
-                     perm_hash=_perm_hash_xxhash64,
-                     bucket_hash=_bucket_hash_xxhash64) -> DataFrame:
+                     hasher: str = "xxhash64") -> DataFrame:
     """Near-dup cluster labels ``(id, component)`` for every document in a
     cluster of ≥2, component = min doc id of the cluster — the composition
-    ``minhash_banded_pairs → est_jaccard ≥ threshold →
+    ``minhash_lsh_candidates → est_jaccard ≥ threshold →
     connected_components_star`` with **exact-duplicate contraction**, and
-    bit-identical output to that composition.
+    bit-identical output to that composition at the same
+    ``num_hashes``/``bands``/``hasher`` (a different banding changes which
+    borderline pairs collide).
 
     Why it is identical: ``est_jaccard`` is a function of the two
     signatures alone, and same-signature documents collide in every band
@@ -332,11 +346,9 @@ def minhash_clusters(docs: DataFrame, text_col: str = "text",
     """
     ann = _persist_swap(
         "minhash_clusters",
-        _annotated_signatures(docs, text_col, id_col, num_hashes,
-                              perm_hash))
+        _annotated_signatures(docs, text_col, id_col, num_hashes, hasher))
     usig = ann.where(F.col(id_col) == F.col("rep")).select("rep", "sig")
-    rep_banded = _band_explode(usig, ["rep"],
-                               num_hashes, bands, bucket_hash)
+    rep_banded = _band_explode(usig, ["rep"], num_hashes, bands, hasher)
     a, b = rep_banded.alias("a"), rep_banded.alias("b")
     rep_pairs = (a.join(b, ["band", "bucket"])
                  .where(F.col("a.rep") < F.col("b.rep"))
@@ -360,20 +372,6 @@ def minhash_clusters(docs: DataFrame, text_col: str = "text",
             .select(id_col, "component"))
 
 
-def minhash_clusters_md5(docs: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", num_hashes: int = 16,
-                         bands: int = 4, threshold: float = 0.5) -> DataFrame:
-    """Engine-portable twin of ``minhash_clusters`` (md5 hash family).
-
-    Defaults MUST stay 16/4 — the parameters of the whole md5 twin family
-    (``minhash_lsh_candidates_md5``) and of the queries.py oracle CTEs
-    (_MINHASH_P/_MINHASH_B); a different banding changes which borderline
-    near-dup pairs collide, so the "bit-identical to the naive
-    composition" contract only holds at matching parameters."""
-    return minhash_clusters(docs, text_col, id_col, num_hashes, bands,
-                            threshold, _perm_hash_md5, _bucket_hash_md5)
-
-
 def _est_jaccard(sig_a: Column, sig_b: Column, num_hashes: int) -> Column:
     """Fraction of matching minhashes — symmetric, so safe under any pair
     canonicalization.
@@ -392,7 +390,7 @@ def _est_jaccard(sig_a: Column, sig_b: Column, num_hashes: int) -> Column:
 
 
 def _annotated_signatures(docs: DataFrame, text_col: str, id_col: str,
-                          num_hashes: int, perm_hash) -> DataFrame:
+                          num_hashes: int, hasher: str) -> DataFrame:
     """``minhash_signature_table`` rows annotated with their signature
     group: ``(id, sig, rep = min id over same-sig docs, cnt = group
     size)`` via ONE ``Window.partitionBy(sig)`` pass (optimization r13,
@@ -402,7 +400,7 @@ def _annotated_signatures(docs: DataFrame, text_col: str, id_col: str,
     ``sig_df.join(usig, "sig")`` back for members — sort-merge-joined on
     the ARRAY key, and because only the bare signature table was
     persisted, that array-keyed join re-executed for every member-
-    expansion consumer (ma/mb/grp in ``minhash_banded_pairs``: up to 4
+    expansion consumer (ma/mb/grp in ``minhash_lsh_candidates``: up to 4
     executions). Annotating inside the persist runs the sig-partitioned
     window once; every former join consumer becomes a filter or
     projection of the cached rows. Both minhash entry points persist
@@ -414,26 +412,23 @@ def _annotated_signatures(docs: DataFrame, text_col: str, id_col: str,
     exact (window partition keys group like groupBy keys).
     """
     wsig = Window.partitionBy("sig")
-    return (minhash_signature_table(docs, text_col, id_col, num_hashes,
-                                    perm_hash)
+    return (minhash_signature_table(docs, text_col, id_col, num_hashes, hasher)
             .select(F.col(id_col), "sig",
                     F.min(id_col).over(wsig).alias("rep"),
                     F.count(F.lit(1)).over(wsig).alias("cnt")))
 
 
-def minhash_banded_pairs(docs: DataFrame, text_col: str, id_col: str,
-                         num_hashes: int, bands: int,
-                         perm_hash, bucket_hash) -> DataFrame:
-    """THE MinHash+LSH banding construction, hash-family-agnostic — the
-    single code path behind ``minhash_lsh_candidates`` (xxhash64) and
-    ``minhash_lsh_candidates_md5`` (md5 oracle twin), so the two can never
-    drift (tests/test_property.py pins wrapper ≡ builder per family).
+def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
+                           id_col: str = "doc_id", num_hashes: int = 32,
+                           bands: int = 8,
+                           hasher: str = "xxhash64") -> DataFrame:
+    """LSH candidate pairs: docs sharing any band of the minhash signature.
 
-    ``perm_hash(shingle, i)`` hashes a shingle under permutation i;
-    ``bucket_hash(cols)`` keys a band's signature slice. Postings →
-    codegen'd per-permutation min-aggregates (one shuffle on the doc id,
-    map-side partials) → **exact-duplicate contraction** (the banded
-    self-join runs over DISTINCT signatures — same argument as
+    rows_per_band = num_hashes/bands; a band's bucket key is the hash of
+    its signature slice. Postings → codegen'd per-permutation
+    min-aggregates (one shuffle on the doc id, map-side partials) →
+    **exact-duplicate contraction** (the banded self-join runs over
+    DISTINCT signatures — same argument as
     ``minhash_clusters``/``simhash_near_dup_pairs``: est_jaccard and band
     collision are functions of the signatures alone, so the verified pair
     graph over documents is the blow-up of the graph over distinct
@@ -452,24 +447,29 @@ def minhash_banded_pairs(docs: DataFrame, text_col: str, id_col: str,
     Returns distinct (id_a < id_b) pairs with est_jaccard = fraction of
     matching minhashes.
 
+    ``hasher="md5"`` gives the engine-portable form: permutation p's hash
+    of shingle s is the STRING md5('p:' || s) (lexicographic min is
+    identical on any engine) and a band's bucket is the md5 of its r
+    joined mins, so DuckDB reproduces the pairs exactly. xxhash64 has no
+    DuckDB equivalent; its output check is rows-only.
+
     The signature table persists MEMORY_AND_DISK (not localCheckpoint):
     lineage is retained so an executor loss recomputes the lost blocks
     instead of failing the job — the signature stage is non-iterative, so
     plan truncation buys nothing here (see minhash_clusters).
     """
     ann = _persist_swap(
-        "minhash_banded_pairs",
-        _annotated_signatures(docs, text_col, id_col, num_hashes,
-                              perm_hash))
+        "minhash_lsh_candidates",
+        _annotated_signatures(docs, text_col, id_col, num_hashes, hasher))
     usig = ann.where(F.col(id_col) == F.col("rep")) \
               .select("rep", "sig", "cnt")
     rep_banded = _band_explode(usig.select("rep", "sig"), ["rep"],
-                               num_hashes, bands, bucket_hash)
+                               num_hashes, bands, hasher)
     a, b = rep_banded.alias("a"), rep_banded.alias("b")
     # est_jaccard computed IN the join projection, before the pair
     # distinct — it commutes with dropDuplicates, so the candidate stream
     # carries (rep_a, rep_b, double) instead of two signature arrays
-    # (~8 KB/candidate for the 128-hash md5 twin — the payload that OOM'd
+    # (~8 KB/candidate for a 128-hash md5 signature — the payload that OOM'd
     # the 100x-replica sweep; same verify-before-distinct lesson as
     # simhash_near_dup_pairs)
     sig_pairs = (a.join(b, ["band", "bucket"])
@@ -500,8 +500,7 @@ def minhash_banded_pairs(docs: DataFrame, text_col: str, id_col: str,
 def incremental_minhash_pairs(new_docs: DataFrame, index: DataFrame,
                               text_col: str = "text", id_col: str = "doc_id",
                               num_hashes: int = 32, bands: int = 8,
-                              perm_hash=_perm_hash_xxhash64,
-                              bucket_hash=_bucket_hash_xxhash64) -> DataFrame:
+                              hasher: str = "xxhash64") -> DataFrame:
     """Candidate pairs touching at least one NEW document, probing a
     persisted banded index — the operational form of MinHash dedup at
     corpus scale (reference runs full-table dedup per load,
@@ -521,7 +520,7 @@ def incremental_minhash_pairs(new_docs: DataFrame, index: DataFrame,
     ``minhash_lsh_candidates`` restricted to pairs with a new side.
     """
     new_banded = banded_signatures(new_docs, text_col, id_col,
-                                   num_hashes, bands, perm_hash, bucket_hash)
+                                   num_hashes, bands, hasher)
     return incremental_pairs_from_banded(new_banded, index, id_col,
                                          num_hashes=num_hashes)
 
@@ -562,20 +561,6 @@ def incremental_pairs_from_banded(new_banded: DataFrame, index: DataFrame,
             .dropDuplicates(["id_a", "id_b"]))
 
 
-def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", num_hashes: int = 32,
-                           bands: int = 8) -> DataFrame:
-    """LSH candidate pairs: docs sharing any band of the minhash signature.
-
-    rows_per_band = num_hashes/bands; a band's bucket key is the hash of its
-    signature slice. Self-join per (band, bucket) → (id_a < id_b) pairs with
-    the estimated Jaccard (fraction of matching minhashes). Construction
-    shared with the md5 oracle twin via ``minhash_banded_pairs``.
-    """
-    return minhash_banded_pairs(docs, text_col, id_col, num_hashes, bands,
-                                _perm_hash_xxhash64, _bucket_hash_xxhash64)
-
-
 def simhash(text: Column, bits: int = 16) -> Column:
     """SimHash of the token set: per-bit majority vote of token hashes.
 
@@ -610,36 +595,34 @@ def simhash_dedup(docs: DataFrame, text_col: str = "text",
             .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_members")))
 
 
-def _token_bit_xxhash64(tok: Column, i: int) -> Column:
-    """Bit i of the production 64-bit JVM token hash."""
-    return F.shiftright(F.xxhash64(tok), i).bitwiseAND(F.lit(1))
+def simhash_signatures(docs: DataFrame, text_col: str = "text",
+                       id_col: str = "doc_id", bits: int = 16,
+                       hasher: str = "xxhash64") -> DataFrame:
+    """(id, sig): SimHash computed the fast way — explode distinct tokens
+    once, one codegen'd HashAggregate with ``bits`` conditional ±1 sums
+    (map-side partials collapse to one row per (doc, partition)), sign of
+    each vote → signature bit i with weight 2^i. NULL text yields
+    signature 0 (the Column form's null algebra).
 
+    Bit-identical to ``simhash(col, bits)`` but ~4x faster at 32 bits on
+    sf0.1: the Column form re-walks the token array once per bit through a
+    higher-order function (no whole-stage codegen), while this form touches
+    each token once and gets map-side partial aggregation for free.
 
-def _token_bit_md5(tok: Column, i: int) -> Column:
-    """Bit i of the engine-portable token hash: bit (i mod 4) of md5 hex
-    digit i/4 — mirrored as strpos/div/mod arithmetic in the SQL oracle."""
-    digit = F.conv(F.substring(F.md5(tok), i // 4 + 1, 1), 16, 10).cast("int")
-    return F.shiftright(digit, i % 4).bitwiseAND(F.lit(1))
-
-
-def simhash_vote_signatures(docs: DataFrame, text_col: str, id_col: str,
-                            bits: int, token_bit) -> DataFrame:
-    """THE SimHash vote/assembly, hash-family-agnostic — the single code
-    path behind ``simhash_signatures`` (xxhash64) and
-    ``simhash_signatures_md5`` (md5 oracle twin), so the two can never
-    drift (tests/test_property.py pins wrapper ≡ builder per family).
-
-    ``token_bit(tok, i)`` → bit i (0/1) of the token's hash. Explode
-    distinct tokens once, one codegen'd HashAggregate with ``bits``
-    conditional ±1 sums (map-side partials collapse to one row per
-    (doc, partition)), sign of each vote → signature bit i with weight 2^i.
-    NULL text yields signature 0 (the Column form's null algebra).
+    ``hasher="md5"`` gives the engine-portable form, exact-oracle-able end
+    to end: token hash bit i = bit (i mod 4) of md5 hex digit i/4 (mirrored
+    as strpos/div/mod arithmetic in SQL), so ``bits`` stops at 60 (15 hex
+    digits); xxhash64 allows 63.
     """
+    family = _HASH_FAMILIES[check_hasher(hasher)]
+    if not 1 <= bits <= family.max_bits:
+        raise ValueError(
+            f"bits must be in [1, {family.max_bits}] for {hasher}, got {bits}")
     toks = docs.select(
         id_col,
         F.explode(F.array_distinct(
             F.split(normalized(F.col(text_col)), " "))).alias("tok"))
-    aggs = [F.sum(F.when(token_bit(F.col("tok"), i) == 1,
+    aggs = [F.sum(F.when(family.token_bit(F.col("tok"), i) == 1,
                          F.lit(1)).otherwise(F.lit(-1))).alias(f"__v{i}")
             for i in range(bits)]
     votes = toks.groupBy(id_col).agg(*aggs)
@@ -652,86 +635,6 @@ def simhash_vote_signatures(docs: DataFrame, text_col: str, id_col: str,
     # form assigns (all votes null -> every bit 0)
     return (docs.select(id_col).join(sigs, id_col, "left")
             .select(id_col, F.coalesce("sig", F.lit(0)).alias("sig")))
-
-
-def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = 16) -> DataFrame:
-    """(id, sig): SimHash computed the fast way — explode distinct tokens,
-    one codegen'd HashAggregate with ``bits`` conditional sums.
-
-    Bit-identical to ``simhash(col, bits)`` but ~4x faster at 32 bits on
-    sf0.1: the Column form re-walks the token array once per bit through a
-    higher-order function (no whole-stage codegen), while this form touches
-    each token once and gets map-side partial aggregation for free.
-    Vote/assembly shared with the md5 twin via ``simhash_vote_signatures``.
-    """
-    if not 1 <= bits <= 63:
-        raise ValueError(f"bits must be in [1, 63], got {bits}")
-    return simhash_vote_signatures(docs, text_col, id_col, bits,
-                                   _token_bit_xxhash64)
-
-
-def minhash_lsh_candidates_md5(docs: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id", num_hashes: int = 16,
-                               bands: int = 4) -> DataFrame:
-    """MinHash+LSH candidate pairs with md5 permutation hashes — the
-    engine-portable twin of ``minhash_lsh_candidates`` (same postings, same
-    per-permutation min, same banded bucket join, same est_jaccard).
-
-    Exists for hard correctness evidence: xxhash64 has no DuckDB
-    equivalent, so the production variant's driver check is rows-only.
-    Permutation p's hash of shingle s is the STRING md5('p:' || s) —
-    lexicographic min is identical on any engine — and a band's bucket is
-    the md5 of its r joined mins. Production keeps seeded xxhash64 (64-bit
-    JVM ints vs hex-string round-trips); the banding/verify algorithm
-    proven here is the same.
-    """
-    return minhash_banded_pairs(docs, text_col, id_col, num_hashes, bands,
-                                _perm_hash_md5, _bucket_hash_md5)
-
-
-def minhash_index_md5(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", num_hashes: int = 16,
-                      bands: int = 4) -> DataFrame:
-    """md5-twin banded index rows (see ``banded_signatures``) — pairs with
-    ``incremental_minhash_pairs_md5`` for an exact-oracle incremental run."""
-    return banded_signatures(docs, text_col, id_col, num_hashes, bands,
-                             _perm_hash_md5, _bucket_hash_md5)
-
-
-def incremental_minhash_pairs_md5(new_docs: DataFrame, index: DataFrame,
-                                  text_col: str = "text",
-                                  id_col: str = "doc_id",
-                                  num_hashes: int = 16,
-                                  bands: int = 4) -> DataFrame:
-    """Engine-portable twin of ``incremental_minhash_pairs`` (md5 hashes,
-    same parameters as ``minhash_lsh_candidates_md5``) — lets the driver
-    oracle-check the incremental probe exactly: the oracle computes all
-    banded pairs over old∪new and keeps those with ≥1 new side."""
-    return incremental_minhash_pairs(new_docs, index, text_col, id_col,
-                                     num_hashes, bands,
-                                     _perm_hash_md5, _bucket_hash_md5)
-
-
-def simhash_signatures_md5(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", bits: int = 16) -> DataFrame:
-    """SimHash signatures with an md5-derived token hash — the engine-
-    portable twin of ``simhash_signatures`` (same per-bit ±1 majority vote,
-    same exploded-agg plan shape).
-
-    Exists for hard correctness evidence: the production variant's xxhash64
-    has no DuckDB equivalent, so its driver check is rows-only; md5 exists
-    on both engines, making this variant exact-oracle-able end to end
-    (token hash bit i = bit (i mod 4) of md5 hex digit i/4 — mirrored as
-    strpos/div/mod arithmetic in SQL). Production keeps xxhash64 (one
-    64-bit JVM hash vs md5's string round-trip); the algorithm proven here
-    is bit-for-bit the same vote/assembly. Signature bit order matches the
-    xxhash64 form (bit i → weight 2^i). NULL text → signature 0.
-    """
-    if not 1 <= bits <= 60:
-        raise ValueError(f"bits must be in [1, 60] (15 hex digits), got {bits}")
-    return simhash_vote_signatures(docs, text_col, id_col, bits,
-                                   _token_bit_md5)
 
 
 def simhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
@@ -763,16 +666,14 @@ def simhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
 
     Returns (id_a, id_b, hamming), id_a < id_b, hamming ≤ k.
 
-    ``hasher='md5'`` swaps in the engine-portable signature
-    (``simhash_signatures_md5``) so the banding construction itself is
+    ``hasher='md5'`` swaps in the engine-portable signature (see
+    ``simhash_signatures``) so the banding construction itself is
     exact-oracle-able; the banding/verify below is hash-agnostic.
     """
     n_bands = k + 1
     width = bits // n_bands
     if width == 0:
         raise ValueError(f"bits={bits} too small for k={k} (k+1 bands)")
-    sig_fn = (simhash_signatures_md5 if hasher == "md5"
-              else simhash_signatures)
     # persist: the signature table feeds FIVE independent subtrees (the
     # distinct-signature contraction, both member-expansion joins, and the
     # two same-signature branches) — without materialization each one
@@ -782,7 +683,7 @@ def simhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
     # bounds repeated-call cache pressure to one live signature table.
     sigs = _persist_swap(
         "simhash_near_dup_pairs",
-        sig_fn(docs, text_col, id_col, bits)
+        simhash_signatures(docs, text_col, id_col, bits, hasher)
         .select(F.col(id_col).alias("id"), "sig"))
     mask = (1 << width) - 1
     # Exact-duplicate contraction: the banded self-join runs over DISTINCT
@@ -1168,9 +1069,7 @@ def minhash_cross_corpus_pairs(train: DataFrame, bench: DataFrame,
                                text_col: str = "text",
                                id_col: str = "doc_id",
                                num_hashes: int = 32, bands: int = 8,
-                               perm_hash=_perm_hash_xxhash64,
-                               bucket_hash=_bucket_hash_xxhash64
-                               ) -> DataFrame:
+                               hasher: str = "xxhash64") -> DataFrame:
     """Cross-corpus banded near-dup join — train × benchmark
     decontamination when BOTH sides are too large to broadcast.
 
@@ -1181,35 +1080,21 @@ def minhash_cross_corpus_pairs(train: DataFrame, bench: DataFrame,
     colliding bands shuffle together, never |train|×|bench| — and verify
     with est_jaccard computed IN the join projection so the candidate
     distinct carries (train_id, bench_id, double), never signature
-    payloads (the minhash_banded_pairs OOM lesson). At 100 TB the train
+    payloads (the minhash_lsh_candidates OOM lesson). At 100 TB the train
     side is the persisted bucketed index and the benchmark probes it
     co-located, exactly like ``incremental_minhash_pairs``.
 
     Output: (train_id, bench_id, est_jaccard), one row per candidate
     pair; filter est_jaccard downstream to the contamination threshold.
     """
-    a = banded_signatures(train, text_col, id_col, num_hashes, bands,
-                          perm_hash, bucket_hash)
-    b = banded_signatures(bench, text_col, id_col, num_hashes, bands,
-                          perm_hash, bucket_hash)
+    a = banded_signatures(train, text_col, id_col, num_hashes, bands, hasher)
+    b = banded_signatures(bench, text_col, id_col, num_hashes, bands, hasher)
     return (a.alias("a").join(b.alias("b"), ["band", "bucket"])
             .select(F.col(f"a.{id_col}").alias("train_id"),
                     F.col(f"b.{id_col}").alias("bench_id"),
                     _est_jaccard(F.col("a.sig"), F.col("b.sig"),
                                  num_hashes).alias("est_jaccard"))
             .dropDuplicates(["train_id", "bench_id"]))
-
-
-def minhash_cross_corpus_pairs_md5(train: DataFrame, bench: DataFrame,
-                                   text_col: str = "text",
-                                   id_col: str = "doc_id",
-                                   num_hashes: int = 16,
-                                   bands: int = 4) -> DataFrame:
-    """Engine-portable twin of ``minhash_cross_corpus_pairs`` (md5 hash
-    family, 16/4 — the md5 twin family's parameters)."""
-    return minhash_cross_corpus_pairs(train, bench, text_col, id_col,
-                                      num_hashes, bands,
-                                      _perm_hash_md5, _bucket_hash_md5)
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",

@@ -27,6 +27,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import check_hasher
+
 _HEX_DIGITS = 8
 _SPACE = 16 ** _HEX_DIGITS
 
@@ -311,7 +313,7 @@ def epoch_shuffle(df: DataFrame, id_col: str = "doc_id",
     base = (df.select(id_col)
             .withColumn("epoch", F.explode(
                 F.sequence(F.lit(0), F.lit(n_epochs - 1)))))
-    if hasher == "md5":
+    if check_hasher(hasher) == "md5":
         # take ceil(nbits/4) hex chars, then drop the excess low bits —
         # monotonic in the hex prefix, so bucket boundaries align with the
         # lexicographic order of the full key.

@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum
+from .dedup import check_hasher
 from .text import normalized
 
 # 2^52: md5's first 13 hex digits as an integer are uniform on [0, 2^52).
@@ -82,7 +83,7 @@ def feature_bucket(s: Column, n_buckets: int, hasher: str = "xxhash64",
     """Hash a gram string into [0, n_buckets). Production ``xxhash64`` is a
     seeded 8-byte JVM hash; ``md5`` is the engine-portable twin the exact
     oracle uses (identical construction, different hash family)."""
-    if hasher == "md5":
+    if check_hasher(hasher) == "md5":
         return (_md5_u52(s, salt) % n_buckets).cast("int")
     return F.pmod(F.xxhash64(F.lit(salt), s), F.lit(n_buckets)).cast("int")
 
@@ -243,7 +244,7 @@ def gumbel_topk(scored: DataFrame, k: int, score_col: str = "score",
     if temperature <= 0:
         raise ValueError(f"temperature must be > 0, got {temperature}")
     sid = F.col(id_col).cast("string")
-    if hasher == "md5":
+    if check_hasher(hasher) == "md5":
         h = _md5_u52(sid, seed)
     else:
         h = F.pmod(F.xxhash64(F.lit(seed), sid), F.lit(_H13_SPACE))

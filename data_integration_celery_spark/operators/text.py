@@ -34,10 +34,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return token_count(t)
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_ratio(text: Column) -> Column:
     stripped = F.regexp_replace(text, r"[^\p{Punct}]", "")
     return F.when(F.length(text) > 0,

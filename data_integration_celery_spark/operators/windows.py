@@ -146,20 +146,6 @@ def monthly_last(df: DataFrame, date_col: str, partition=None) -> DataFrame:
               .agg(F.max(date_col).alias("month_end_" + date_col)))
 
 
-def pivot_wide(df: DataFrame, index, pivot_col: str, value_col: str,
-               values: list | None = None, agg: str = "first") -> DataFrame:
-    """Long→wide pivot (W12): date × contract matrices
-    (reference tasks/wind/future_reorg/reorg_md_2_db.py:207-213).
-
-    Prefer windows on the long format at scale — wide schemas explode past
-    spark.sql.pivotMaxValues; pass explicit ``values`` to skip the extra
-    distinct-values job.
-    """
-    idx = index if isinstance(index, (list, tuple)) else [index]
-    p = df.groupBy(*idx).pivot(pivot_col, values)
-    return getattr(p, "agg")(getattr(F, agg)(value_col))
-
-
 def scd2_from_snapshots(snapshots: DataFrame, key, snap_col: str,
                         attr_cols: list[str]) -> DataFrame:
     """Build SCD2 validity intervals from periodic full snapshots.

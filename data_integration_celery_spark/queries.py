@@ -1715,13 +1715,15 @@ def _minhash_side_ctes(tag: str, where: str) -> str:
        "per-permutation min → band buckets → pair join → signature-match "
        "estimate), which the production seeded-xxhash64 variant can't get "
        "(rows-only). Same plan shape; only the permutation hash differs "
-       "(operators/dedup.py minhash_lsh_candidates_md5). Oracle CTEs are "
-       "generated by _minhash_side_ctes — ONE shingle/signature/banding "
-       "definition shared with the cross-corpus oracle, so the two can "
-       "never drift.")
+       "(operators/dedup.py minhash_lsh_candidates(hasher='md5')). Oracle "
+       "CTEs are generated by _minhash_side_ctes — ONE shingle/signature/"
+       "banding definition shared with the cross-corpus oracle, so the two "
+       "can never drift.")
 def dedup_minhash_md5_q(spark, sf_dir):
     from .operators import dedup
-    return dedup.minhash_lsh_candidates_md5(_t(spark, sf_dir, "documents"))
+    return dedup.minhash_lsh_candidates(
+        _t(spark, sf_dir, "documents"), hasher="md5",
+        num_hashes=_MINHASH_P, bands=_MINHASH_B)
 
 
 @q("dedup_cross_contamination_md5",
@@ -1751,7 +1753,8 @@ def dedup_cross_contamination_md5_q(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 17 != 0)
     bench = docs.where(F.col("doc_id") % 17 == 0)
-    return dedup.minhash_cross_corpus_pairs_md5(train, bench)
+    return dedup.minhash_cross_corpus_pairs(
+        train, bench, hasher="md5", num_hashes=_MINHASH_P, bands=_MINHASH_B)
 
 
 @q("dedup_minhash_incremental_md5",
@@ -1797,9 +1800,12 @@ def dedup_cross_contamination_md5_q(spark, sf_dir):
 def dedup_minhash_incremental_md5_q(spark, sf_dir):
     from .operators import dedup
     docs = _t(spark, sf_dir, "documents")
-    index = dedup.minhash_index_md5(docs.where(F.col("doc_id") % 10 != 0))
-    return dedup.incremental_minhash_pairs_md5(
-        docs.where(F.col("doc_id") % 10 == 0), index)
+    index = dedup.banded_signatures(
+        docs.where(F.col("doc_id") % 10 != 0), "text", "doc_id",
+        hasher="md5", num_hashes=_MINHASH_P, bands=_MINHASH_B)
+    return dedup.incremental_minhash_pairs(
+        docs.where(F.col("doc_id") % 10 == 0), index, hasher="md5",
+        num_hashes=_MINHASH_P, bands=_MINHASH_B)
 
 
 @q("dedup_frequent_ngrams",
@@ -1938,10 +1944,11 @@ _SIMHASH_MD5_SIGS_CTE = _simhash_md5_sigs_cte(16)
        "signature grouping), which the production xxhash64 variant can't "
        "get because DuckDB lacks xxhash64 (rows-only). Same exploded-agg "
        "plan; only the token hash differs "
-       "(operators/dedup.py simhash_signatures_md5).")
+       "(operators/dedup.py simhash_signatures(hasher='md5')).")
 def dedup_simhash_md5_q(spark, sf_dir):
     from .operators import dedup
-    sigs = dedup.simhash_signatures_md5(_t(spark, sf_dir, "documents"))
+    sigs = dedup.simhash_signatures(_t(spark, sf_dir, "documents"),
+                                    hasher="md5")
     return (sigs.withColumnRenamed("sig", "simhash")
             .groupBy("simhash")
             .agg(F.min("doc_id").alias("doc_id"),
@@ -3540,7 +3547,8 @@ def pipeline_cluster_survivors(spark, sf_dir):
     # the naive pairs→components composition (see minhash_clusters
     # docstring), but the quadratic dup-cluster intermediate never
     # materializes (100x replica: alpha 1.39 → sub-linear)
-    labeled = dedup.minhash_clusters_md5(docs, threshold=0.5)
+    labeled = dedup.minhash_clusters(docs, threshold=0.5, hasher="md5",
+                                     num_hashes=_MINHASH_P, bands=_MINHASH_B)
     clustered = (docs.select("doc_id", "n_chars")
                  .join(labeled, "doc_id")
                  .select("doc_id", "component", "n_chars"))

@@ -154,11 +154,3 @@ def compact_table(spark: SparkSession, path: str,
         _hadoop_rm(spark, backup)
         spark.catalog.refreshByPath(path)
     return len(list_data_files(spark, path))
-
-
-def backup_table(df: DataFrame, path: str) -> None:
-    """S11: point-in-time backup copy (the reference's ``CREATE TABLE LIKE +
-    INSERT SELECT`` before risky refreshes, tasks/jqdata/stock/
-    available_check/__init__.py:23-48) — a CTAS snapshot the snapshot-diff
-    audit (operators.quality.snapshot_diff_audit) compares against."""
-    df.write.mode("overwrite").parquet(path)

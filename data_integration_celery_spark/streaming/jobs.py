@@ -295,23 +295,20 @@ def stream_incremental_dedup(docs: DataFrame, index_path: str,
     (proven by tests/test_dedup_methods.py
     test_incremental_probe_on_bucketed_index_no_index_shuffle).
     """
-    from ..operators.dedup import (banded_signatures,
-                                   incremental_pairs_from_banded,
-                                   _perm_hash_md5, _perm_hash_xxhash64,
-                                   _bucket_hash_md5, _bucket_hash_xxhash64)
+    from ..operators.dedup import (banded_signatures, check_hasher,
+                                   incremental_pairs_from_banded)
     from ..operators.upsert import _exists, overwrite_partitions
 
-    # 'md5' is the engine-portable twin form (exact-oracle evidence for the
+    # 'md5' is the engine-portable form (exact-oracle evidence for the
     # streaming probe, see queries.stream_dedup_incremental_md5); production
-    # stays on seeded xxhash64 (8-byte keys).
-    perm, bkt = ((_perm_hash_md5, _bucket_hash_md5) if hasher == "md5"
-                 else (_perm_hash_xxhash64, _bucket_hash_xxhash64))
+    # stays on seeded xxhash64 (8-byte keys). Checked here, not at the first
+    # micro-batch, so a bad name fails before the query starts.
+    check_hasher(hasher)
 
     def probe_and_extend(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         new_banded = banded_signatures(
-            batch_df, text_col, id_col, num_hashes, bands,
-            perm, bkt).persist()
+            batch_df, text_col, id_col, num_hashes, bands, hasher).persist()
         try:
             # existence-branch, not read-exception branch: a transient read
             # error on a real index must propagate, never silently restart

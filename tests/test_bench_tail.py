@@ -77,3 +77,44 @@ def test_protection_does_not_block_eviction_when_all_protected():
     compact, med = _compact(500)
     doc = _check(_padded_compact_line(compact, med, frozenset(med)))
     assert len(doc["queries"]) < 500
+
+
+def test_last_query_entry_evicted_before_scalar_fields():
+    # one pathologically long name: evicting it must come before dropping
+    # scalar fields (keeping it forced the scalar drops and then a raise)
+    compact, med = _compact(0, queries={"q" * 1900: 1.0})
+    doc = _check(_padded_compact_line(compact, {"q" * 1900: 1.0}))
+    assert doc["queries"] == {}
+    assert doc["sec_per_query"] == 0.5 and doc["value_cold"] == 2.0
+
+
+@pytest.mark.parametrize("raw, suffix", [
+    ("32", ""), ("032", ""), (" 32 ", ""), ("8", "_c8"), (" 8", "_c8"),
+    ("four", "")])
+def test_baseline_name_normalizes_cpus(monkeypatch, raw, suffix):
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    assert bench._baseline_name() == f"BENCH_LAST_{bench._sf_tag()}{suffix}.json"
+
+
+def test_prev_tail_fallback_sized_to_previous_tail(monkeypatch, tmp_path):
+    # a payload without "tail_names": the fallback must protect every name
+    # an untruncated previous tail carried, and for a truncated one the
+    # slowest prefix that fits the line — not a fixed count
+    import bench
+
+    monkeypatch.setattr(bench, "_baseline_path",
+                        lambda: str(tmp_path / "no_such_payload.json"))
+    small = {f"q{i}": 0.01 * i for i in range(120)}
+    assert bench._prev_tail_names(small) == frozenset(small)
+
+    big = {f"q{i:03d}": 0.01 * i for i in range(500)}
+    names = bench._prev_tail_names(big)
+    ranked = sorted(big, key=big.get, reverse=True)
+    assert names == frozenset(ranked[:len(names)])
+
+    def fits(keys):
+        return len(json.dumps({k: round(big[k], 2) for k in keys},
+                              separators=(",", ":"))) <= 1999
+    assert fits(names) and not fits(ranked[:len(names) + 1])

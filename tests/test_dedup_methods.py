@@ -1,7 +1,10 @@
 """Both exact Jaccard strategies must agree (count vs PPJoin prefix)."""
 
+import pytest
+
 from data_integration_celery_spark import catalog
-from data_integration_celery_spark.operators import dedup
+from data_integration_celery_spark.operators import dedup, sampling, selection
+from data_integration_celery_spark.streaming import jobs
 
 
 def _pairs(df):
@@ -79,7 +82,7 @@ def test_contamination_scores_bounds(spark):
 
 
 def test_minhash_banded_pairs_contraction_identical(spark):
-    """The distinct-signature contraction inside minhash_banded_pairs must
+    """The distinct-signature contraction inside minhash_lsh_candidates must
     be invisible in the output: bit-identical pairs + est_jaccard to the
     naive document-level banded join, on a corpus with exact-duplicate
     groups (where the contraction actually collapses rows), near-dups, and
@@ -89,8 +92,7 @@ def test_minhash_banded_pairs_contraction_identical(spark):
     from pyspark.sql import functions as F
 
     from data_integration_celery_spark.operators import dedup
-    from data_integration_celery_spark.operators.dedup import (
-        _bucket_hash_md5, _est_jaccard, _perm_hash_md5)
+    from data_integration_celery_spark.operators.dedup import _est_jaccard
 
     rnd = random.Random(21)
     vocab = [f"tok{i}" for i in range(60)]
@@ -108,13 +110,12 @@ def test_minhash_banded_pairs_contraction_identical(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     got = {(r["id_a"], r["id_b"]): r["est_jaccard"]
-           for r in dedup.minhash_banded_pairs(
-               docs, "text", "doc_id", 16, 4,
-               _perm_hash_md5, _bucket_hash_md5).collect()}
+           for r in dedup.minhash_lsh_candidates(
+               docs, "text", "doc_id", 16, 4, hasher="md5").collect()}
 
     # naive reference: document-level banded self-join (the pre-r7 form)
     banded = dedup.banded_signatures(docs, "text", "doc_id", 16, 4,
-                                     _perm_hash_md5, _bucket_hash_md5)
+                                     hasher="md5")
     a, b = banded.alias("a"), banded.alias("b")
     want = {(r["id_a"], r["id_b"]): r["est_jaccard"]
             for r in (a.join(b, ["band", "bucket"])
@@ -261,6 +262,38 @@ def test_simhash_banded_validates_width(spark):
         dedup.simhash_near_dup_pairs(docs, bits=4, k=7)
 
 
+_HASHER_ENTRY_POINTS = {
+    "simhash_near_dup_pairs":
+        lambda spark, docs, h: dedup.simhash_near_dup_pairs(docs, hasher=h),
+    "simhash_signatures":
+        lambda spark, docs, h: dedup.simhash_signatures(docs, hasher=h),
+    "minhash_lsh_candidates":
+        lambda spark, docs, h: dedup.minhash_lsh_candidates(docs, hasher=h),
+    "stream_incremental_dedup":
+        lambda spark, docs, h: jobs.stream_incremental_dedup(
+            spark.readStream.format("rate").load(), "unused_index",
+            "unused_pairs", "unused_ckpt", hasher=h),
+    "feature_bucket":
+        lambda spark, docs, h: selection.feature_bucket(docs["text"], 8,
+                                                        hasher=h),
+    "gumbel_topk":
+        lambda spark, docs, h: selection.gumbel_topk(
+            docs.selectExpr("doc_id", "1.0 AS score"), 1, hasher=h),
+    "epoch_shuffle":
+        lambda spark, docs, h: sampling.epoch_shuffle(docs, hasher=h),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_HASHER_ENTRY_POINTS))
+def test_unknown_hasher_rejected(spark, entry):
+    """A hasher name other than "xxhash64"/"md5" (wrong case, typo) must
+    raise at plan construction, never fall back to xxhash64 silently."""
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    for bad in ("MD5", "xxhash", ""):
+        with pytest.raises(ValueError, match="'xxhash64' or 'md5'"):
+            _HASHER_ENTRY_POINTS[entry](spark, docs, bad)
+
+
 def test_simhash_signatures_bit_identical_to_column_form(spark):
     """The exploded-aggregate fast path must produce bit-identical
     signatures to the Column ladder, including the NULL-text edge."""
@@ -362,7 +395,7 @@ def test_simhash_md5_twin_matches_python_reference(spark):
              (4, None)]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
     got = {r["doc_id"]: r["sig"]
-           for r in dedup.simhash_signatures_md5(docs).collect()}
+           for r in dedup.simhash_signatures(docs, hasher="md5").collect()}
 
     def ref_sig(text):
         if text is None:
@@ -401,7 +434,8 @@ def test_minhash_md5_twin_finds_planted_duplicates(spark):
              "optimizing join orders with cost models")],
         "doc_id long, text string")
     got = {(r["id_a"], r["id_b"]): r["est_jaccard"]
-           for r in dedup.minhash_lsh_candidates_md5(docs).collect()}
+           for r in dedup.minhash_lsh_candidates(
+               docs, num_hashes=16, bands=4, hasher="md5").collect()}
     assert got[(1, 2)] == 1.0
     assert all(4 not in pair for pair in got)
     # near-dup 3 pairs with at least one of the identical docs
@@ -418,9 +452,8 @@ def test_incremental_minhash_equals_full_restricted(spark, sf_dir):
     docs = catalog.load(spark, "documents", sf_dir).select("doc_id", "text")
     old = docs.where("doc_id % 10 != 0")
     new = docs.where("doc_id % 10 = 0")
-    index = dedup.banded_signatures(
-        old, "text", "doc_id", 32, 8,
-        dedup._perm_hash_xxhash64, dedup._bucket_hash_xxhash64)
+    index = dedup.banded_signatures(old, "text", "doc_id", 32, 8,
+                                    hasher="xxhash64")
     inc = {(r["id_a"], r["id_b"]): round(r["est_jaccard"], 9)
            for r in dedup.incremental_minhash_pairs(new, index).collect()}
     full = {(r["id_a"], r["id_b"]): round(r["est_jaccard"], 9)
@@ -437,8 +470,9 @@ def test_incremental_minhash_md5_twin_same_pairs(spark, sf_dir):
     docs = catalog.load(spark, "documents", sf_dir).select("doc_id", "text")
     old = docs.where("doc_id % 10 != 0")
     new = docs.where("doc_id % 10 = 0")
-    idx = dedup.minhash_index_md5(old)
-    got = dedup.incremental_minhash_pairs_md5(new, idx).collect()
+    idx = dedup.banded_signatures(old, "text", "doc_id", 16, 4, hasher="md5")
+    got = dedup.incremental_minhash_pairs(new, idx, num_hashes=16, bands=4,
+                                          hasher="md5").collect()
     assert all(r["id_a"] < r["id_b"] for r in got)
     assert all(0.0 <= r["est_jaccard"] <= 1.0 for r in got)
 
@@ -538,8 +572,7 @@ def test_incremental_probe_replay_idempotent(spark, sf_dir):
     docs = catalog.load(spark, "documents", sf_dir).select("doc_id", "text")
     old = docs.where("doc_id % 10 != 0")
     new = docs.where("doc_id % 10 = 0")
-    args = ("text", "doc_id", 32, 8,
-            dedup._perm_hash_xxhash64, dedup._bucket_hash_xxhash64)
+    args = ("text", "doc_id", 32, 8, "xxhash64")
     idx_clean = dedup.banded_signatures(old, *args)
     new_banded = dedup.banded_signatures(new, *args)
     idx_dirty = idx_clean.unionByName(new_banded)  # failed attempt landed
@@ -562,8 +595,7 @@ def test_incremental_probe_on_bucketed_index_no_index_shuffle(spark, sf_dir):
     docs = catalog.load(spark, "documents", sf_dir).select("doc_id", "text")
     old = docs.where("doc_id % 10 != 0")
     new = docs.where("doc_id % 10 = 0")
-    args = ("text", "doc_id", 32, 8,
-            dedup._perm_hash_xxhash64, dedup._bucket_hash_xxhash64)
+    args = ("text", "doc_id", 32, 8, "xxhash64")
     idx_rows = dedup.banded_signatures(old, *args)
     skew.write_bucketed(idx_rows, "b_minhash_index", ["band", "bucket"],
                         buckets=8)
@@ -631,13 +663,15 @@ def test_minhash_clusters_equals_naive_composition(spark, sf_dir):
              (902, "another unrelated text on parquet row group layout")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    naive_pairs = (dedup.minhash_lsh_candidates_md5(docs)
+    naive_pairs = (dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=4,
+                                                hasher="md5")
                    .where("est_jaccard >= 0.5").select("id_a", "id_b"))
     comp = dedup.connected_components_star(naive_pairs)
     want = {(r["node"], r["component"]) for r in comp.collect()}
 
     got = {(r["doc_id"], r["component"]) for r in
-           dedup.minhash_clusters_md5(docs, threshold=0.5).collect()}
+           dedup.minhash_clusters(docs, num_hashes=16, bands=4,
+                                  threshold=0.5, hasher="md5").collect()}
     assert got == want
     # sanity: the dup groups really did cluster (the shared base text makes
     # all four variant-groups near-dups of each other — one merged cluster
@@ -656,7 +690,8 @@ def test_minhash_clusters_same_sig_group_without_lsh_neighbors(spark):
             (20, "one two three four five six seven eight nine ten")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r["doc_id"], r["component"]) for r in
-           dedup.minhash_clusters_md5(docs, threshold=0.9).collect()}
+           dedup.minhash_clusters(docs, num_hashes=16, bands=4,
+                                  threshold=0.9, hasher="md5").collect()}
     assert got == {(10, 10), (11, 10)}
 
 
@@ -670,8 +705,10 @@ def test_cross_corpus_pairs_equals_restricted_self_join(spark, sf_dir):
     train = docs.where(F.col("doc_id") % 17 != 0)
     bench = docs.where(F.col("doc_id") % 17 == 0)
     got = {(r["train_id"], r["bench_id"], r["est_jaccard"]) for r in
-           dedup.minhash_cross_corpus_pairs_md5(train, bench).collect()}
-    full = dedup.minhash_lsh_candidates_md5(docs).collect()
+           dedup.minhash_cross_corpus_pairs(train, bench, num_hashes=16,
+                                            bands=4, hasher="md5").collect()}
+    full = dedup.minhash_lsh_candidates(docs, num_hashes=16, bands=4,
+                                        hasher="md5").collect()
     want = set()
     for r in full:
         a, b, e = r["id_a"], r["id_b"], r["est_jaccard"]
@@ -694,7 +731,8 @@ def test_cross_corpus_pairs_planted_contamination(spark):
         [(100, base + " indeed"), (101, "another unrelated benchmark row")],
         "doc_id long, text string")
     out = {(r["train_id"], r["bench_id"]): r["est_jaccard"] for r in
-           dedup.minhash_cross_corpus_pairs_md5(train, bench).collect()}
+           dedup.minhash_cross_corpus_pairs(train, bench, num_hashes=16,
+                                            bands=4, hasher="md5").collect()}
     assert (1, 100) in out and out[(1, 100)] >= 0.5
     assert all(k == (1, 100) for k in out)
 
@@ -794,7 +832,7 @@ def test_minhash_signature_cache_retains_lineage():
 
     from data_integration_celery_spark.operators import dedup
 
-    for fn in (dedup.minhash_banded_pairs, dedup.minhash_clusters,
+    for fn in (dedup.minhash_lsh_candidates, dedup.minhash_clusters,
                dedup.simhash_near_dup_pairs):
         src = inspect.getsource(fn)
         assert ".localCheckpoint(" not in src, fn.__name__
@@ -1002,7 +1040,7 @@ def test_annotated_signatures_rep_cnt_match_groupby(spark):
     from pyspark.sql import functions as F
 
     from data_integration_celery_spark.operators.dedup import (
-        _annotated_signatures, _perm_hash_md5, minhash_signature_table)
+        _annotated_signatures, minhash_signature_table)
 
     rnd = random.Random(13)
     vocab = [f"tok{i}" for i in range(50)]
@@ -1015,14 +1053,13 @@ def test_annotated_signatures_rep_cnt_match_groupby(spark):
         rows.append((doc_id, " ".join(rnd.sample(vocab, 10)))); doc_id += 1
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    ann = _annotated_signatures(docs, "text", "doc_id", 16, _perm_hash_md5)
+    ann = _annotated_signatures(docs, "text", "doc_id", 16, "md5")
     got = [(r["doc_id"], tuple(r["sig"]), r["rep"], r["cnt"])
            for r in ann.collect()]
     assert len(got) == len(rows)
 
     # reference: the old groupBy form over the same signature table
-    sig = minhash_signature_table(docs, "text", "doc_id", 16,
-                                  _perm_hash_md5)
+    sig = minhash_signature_table(docs, "text", "doc_id", 16, "md5")
     ref = {tuple(r["sig"]): (r["rep"], r["cnt"])
            for r in sig.groupBy("sig")
                        .agg(F.min("doc_id").alias("rep"),

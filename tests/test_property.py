@@ -169,10 +169,10 @@ def test_scalable_rank_equals_global_window(spark):
 
 
 def test_md5_twin_lockstep_by_construction(spark):
-    """The md5 oracle twins and the xxhash64 production variants share ONE
-    banding/vote builder (minhash_banded_pairs / simhash_vote_signatures);
-    with identical hash inputs the outputs are identical — so any edit to
-    the shared construction moves production and twin together."""
+    """Both hash families run ONE banding/vote construction, selected by
+    ``hasher=``; per family, exact duplicates pair with est_jaccard 1.0,
+    identical docs get identical SimHash signatures and NULL text gets
+    signature 0."""
     from data_integration_celery_spark.operators import dedup as D
 
     docs = spark.createDataFrame(
@@ -183,42 +183,17 @@ def test_md5_twin_lockstep_by_construction(spark):
          (5, None)],
         "doc_id long, text string")
 
-    # twin wrapper ≡ builder with the md5 family (signature drift guard)
-    twin = D.minhash_lsh_candidates_md5(docs, num_hashes=16, bands=4)
-    built = D.minhash_banded_pairs(docs, "text", "doc_id", 16, 4,
-                                   D._perm_hash_md5, D._bucket_hash_md5)
-    assert sorted(map(tuple, twin.collect())) == \
-           sorted(map(tuple, built.collect()))
+    for hasher in ("md5", "xxhash64"):
+        pairs = D.minhash_lsh_candidates(docs, num_hashes=16, bands=4,
+                                         hasher=hasher)
+        hit = {(r["id_a"], r["id_b"]): r["est_jaccard"]
+               for r in pairs.collect()}
+        assert hit.get((1, 4)) == 1.0, hasher
 
-    # production wrapper ≡ builder with the xxhash64 family
-    prod = D.minhash_lsh_candidates(docs, num_hashes=16, bands=4)
-    built_x = D.minhash_banded_pairs(docs, "text", "doc_id", 16, 4,
-                                     D._perm_hash_xxhash64,
-                                     D._bucket_hash_xxhash64)
-    assert sorted(map(tuple, prod.collect())) == \
-           sorted(map(tuple, built_x.collect()))
-
-    # exact duplicates surface in BOTH families with est_jaccard 1.0
-    for pairs in (twin, prod):
-        hit = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in pairs.collect()}
-        assert hit.get((1, 4)) == 1.0
-
-    # same for simhash: wrapper ≡ builder per family, and identical docs
-    # get identical signatures in both families
-    s_twin = D.simhash_signatures_md5(docs, bits=16)
-    s_built = D.simhash_vote_signatures(docs, "text", "doc_id", 16,
-                                        D._token_bit_md5)
-    assert sorted(map(tuple, s_twin.collect())) == \
-           sorted(map(tuple, s_built.collect()))
-    s_prod = D.simhash_signatures(docs, bits=16)
-    s_built_x = D.simhash_vote_signatures(docs, "text", "doc_id", 16,
-                                          D._token_bit_xxhash64)
-    assert sorted(map(tuple, s_prod.collect())) == \
-           sorted(map(tuple, s_built_x.collect()))
-    for sigs in (s_twin, s_prod):
+        sigs = D.simhash_signatures(docs, bits=16, hasher=hasher)
         by_id = {r["doc_id"]: r["sig"] for r in sigs.collect()}
-        assert by_id[1] == by_id[4]
-        assert by_id[5] == 0  # NULL text → signature 0 in both families
+        assert by_id[1] == by_id[4], hasher
+        assert by_id[5] == 0, hasher  # NULL text → signature 0
 
 
 @settings(max_examples=10, deadline=None)
